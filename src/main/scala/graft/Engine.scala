@@ -878,35 +878,67 @@ object Engine {
 
   @volatile private var scratchRootOpt: Option[String] = None
 
-  /** Route ALL scratch I/O — shuffle local dirs, temporary streaming
-    * checkpoints (offsets + STATE STORE delta files: the per
-    * operator×partition×trigger commit tax), and [[sharedDir]] stream
-    * sources/sinks — onto a RAM-backed tmpfs when one is mounted.
-    * Call FIRST in a harness main, then pass the returned path as
-    * `spark.local.dir`; java.io.tmpdir is redirected here so Spark's
-    * `Utils.createTempDir` callers (temp checkpoints) land on it too.
+  /** Applies the two fixed settings that make a session's local
+    * checkpoint and file I/O fork-free. Without native `libhadoop`,
+    * Hadoop's Java local filesystem shells out to resolve links and
+    * to set permissions: the stock FileContext-based checkpoint
+    * manager's rename resolves links twice (`ChecksumFs.renameInternal`
+    * and `FileSystem.rename`, each through `FileUtil.readLink`, one
+    * `readlink` process each), and RawLocalFileSystem.setPermission
+    * execs `chmod` on every create and mkdirs. One perfbench `stream`
+    * run spawned 6,909 processes (5,296 readlink, 1,603 chmod); with
+    * these settings it spawns 10, none on the checkpoint path
+    * (PERF.md round 18).
+    *   - `checkpointFileManagerClass`: Spark's FileSystem-based
+    *     manager. On a local FS its rename is one POSIX `rename(2)`
+    *     (`File.renameTo`), with no link resolution. The trade: a
+    *     no-overwrite rename becomes check-then-rename instead of one
+    *     atomic step, which matters only when two writers share a
+    *     checkpoint dir — graft never does (every drain owns a fresh
+    *     one, and scratch is per pid).
+    *   - `fs.file.impl`: [[graft.io.LocalFs]], the stock checksummed
+    *     LocalFileSystem with chmod done through NIO.
+    * No integrity check is dropped: Spark's checkpoint file checksums
+    * (`ChecksumCheckpointFileManager`) and Hadoop's `.crc` files
+    * both stay on.
     *
-    * Why: on this bench host `/tmp` is plain disk while `/dev/shm` is
-    * a 126 GB tmpfs. The 18 stateful streaming drains fsync hundreds
-    * of tiny state/commit-log files per run through the checkpoint
-    * dir — on a contended disk that fixed cost dominates the drains
-    * and tracks HOST disk load, which is exactly the shape of the r15
-    * driver-side streaming elevation (22% of bench total, rotating
-    * per-query spikes at unchanged code). Scratch on tmpfs makes the
-    * fixed cost memory-speed and immune to other tenants' disk I/O.
-    * At 100 TB the analog is provisioned local NVMe for
-    * `spark.local.dir` and an object-store checkpoint dir sized for
-    * the state volume — the point stands: scratch placement is a
-    * first-class resource the harness pins, never inherited from
-    * wherever `/tmp` happens to mount. A/B lever:
-    * `SPARK_GRAFT_SCRATCH=disk` keeps the JVM defaults (the r16
-    * before/after measurement in PERF.md); an explicit path routes
-    * there instead of `/dev/shm`. */
-  /** [[routeScratch]] applied to a session builder: routes scratch
-    * and points `spark.local.dir` (shuffle/spill files) at it. */
-  def withScratch(b: SparkSession.Builder): SparkSession.Builder =
-    routeScratch().map(p => b.config("spark.local.dir", p)).getOrElse(b)
+    * Every graft session builder goes through this, specs included,
+    * so specs run the I/O path the benchmark measures. */
+  def withLocalIo(b: SparkSession.Builder): SparkSession.Builder = b
+    .config("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
 
+  /** [[withLocalIo]] plus [[routeScratch]]: routes scratch and points
+    * `spark.local.dir` (shuffle/spill files) at it. */
+  def withScratch(b: SparkSession.Builder): SparkSession.Builder = {
+    val local = withLocalIo(b)
+    routeScratch().map(p => local.config("spark.local.dir", p))
+      .getOrElse(local)
+  }
+
+  /** Route ALL scratch I/O — shuffle local dirs, temporary streaming
+    * checkpoints (offsets, commit log, state-store delta files), and
+    * [[sharedDir]] stream sources/sinks — onto a RAM-backed tmpfs when
+    * one is mounted. Call FIRST in a harness main, then pass the
+    * returned path as `spark.local.dir`; java.io.tmpdir is redirected
+    * here so Spark's `Utils.createTempDir` callers (temp checkpoints)
+    * land on it too.
+    *
+    * Why: scratch placement is a resource the harness pins, never
+    * inherited from wherever `/tmp` happens to mount, and a per-pid
+    * root is reclaimed as a whole on exit (plus an age sweep for
+    * hard-killed runs). It is NOT what made streaming commits slow.
+    * Round 16 blamed fsync of the state/commit-log files on plain-disk
+    * `/tmp`; the measured cause was process forks on every checkpoint
+    * rename, create and mkdirs (see [[withLocalIo]]), and state-store
+    * commit time reads the same on disk and on `/dev/shm` (PERF.md
+    * round 18). At 100 TB the analog is provisioned local NVMe for
+    * `spark.local.dir` and an object-store checkpoint dir sized for
+    * the state volume. A/B lever: `SPARK_GRAFT_SCRATCH=disk` keeps the
+    * JVM defaults; an explicit path routes there instead of
+    * `/dev/shm`. */
   def routeScratch(): Option[String] = {
     val pref = sys.env.get("SPARK_GRAFT_SCRATCH")
     if (pref.contains("disk")) None

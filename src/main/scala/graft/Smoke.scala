@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * print the row count. Mirrors the driver's smoke gate. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = Engine.withLocalIo(SparkSession.builder())
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

@@ -186,10 +186,15 @@ object StreamingQueries {
     * 18-query streaming family at sf0.1: 8 → 86.9 s, 4 → 76.5 s,
     * 2 → 77.3 s — 4 is the knee (2 starts losing the parallelism
     * that still helps the per-row half), so the gates run at 4.
-    * At 100 TB the SAME knob is sized the OTHER way (state must fit
-    * per executor); the point is that state partitioning is sized to
-    * state volume, not inherited from the batch default. Restores the
-    * session value even on failure (the conf is session-global). */
+    * Most of that per-store commit tax was process forks, not state
+    * work: before [[graft.Engine.withLocalIo]], every checkpoint rename
+    * forked `readlink` and every create/mkdirs forked `chmod`. The r15
+    * knee was measured under that tax and has not been re-measured
+    * without it. At 100 TB the SAME knob is sized the OTHER way
+    * (state must fit per executor); the point is that state
+    * partitioning is sized to state volume, not inherited from the
+    * batch default. Restores the session value even on failure (the
+    * conf is session-global). */
   private def withStatePartitions[T](s: SparkSession, n: Int)
                                     (body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session base for all specs (one JVM-wide session via
   * getOrCreate; configs align with the driver contract). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Engine.withLocalIo(SparkSession.builder())
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
